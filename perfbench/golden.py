@@ -53,8 +53,13 @@ def expected(cache_dir: str, n_pages: int, n_seeds: int, rounds: int,
              k: int, n_hosts: int) -> dict:
     """Simulator record for these inputs, cached on disk. The key is the
     input sizes, so two workloads with the same inputs (the two frontier
-    modes) share one expected result."""
-    key = f"sim-{n_pages}-{n_seeds}-{rounds}-{k}-{n_hosts}.json"
+    modes) share one expected result, plus a hash of the simulator and
+    the spec and generator it follows: a change to any of them recomputes
+    the record."""
+    from perfbench import source_hash
+
+    src = source_hash("simulator.py", "spec.py", "synth.py")
+    key = f"sim-{n_pages}-{n_seeds}-{rounds}-{k}-{n_hosts}-{src}.json"
     path = os.path.join(cache_dir, key)
     if os.path.exists(path):
         with open(path) as f:

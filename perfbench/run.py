@@ -34,15 +34,22 @@ import time
 import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from perfbench.workloads import WARMUP_ROUNDS  # noqa: E402
+
 CACHE = os.path.join(ROOT, ".perfbench_cache")
 DRIVER_MEM = "2g"
 TABLES = ("frontier", "seen", "seen_delta", "hosts", "fetch_log", "pages",
           "dlq", "metrics", "frontier_head")
 
-END_TO_END_UNITS = {
-    "setup_s": "s", "fetch_per_s": "pages/s", "round_s.p50": "s",
-    "commit_mb_per_round": "MB", "peak_rss_mb": "MB",
-}
+
+def metric_units() -> dict[str, str]:
+    """Unit of every metric, as ``BENCHMARK.json`` lists it."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    return {m["name"]: m["unit"]
+            for m in spec["end_to_end"] + spec["per_layer"]}
 
 
 def pin_environment(cores: int, run_dir: str, trace: bool) -> None:
@@ -73,8 +80,8 @@ def dir_bytes(path: str) -> int:
 
 
 class Crawl:
-    """One crawl into a fresh warehouse: round 0, ``warmup`` rounds, then
-    the measured rounds."""
+    """One crawl into a fresh warehouse: round 0, ``WARMUP_ROUNDS``
+    rounds, then the measured rounds."""
 
     def __init__(self, spark, wl, inputs, wh_dir: str, tracer=None):
         from crawler_spark.frontier.store import RoundStore
@@ -90,7 +97,7 @@ class Crawl:
 
     @property
     def measured(self) -> range:
-        return range(self.wl.warmup + 1, self.wl.total_rounds + 1)
+        return range(WARMUP_ROUNDS + 1, self.wl.total_rounds + 1)
 
     def _call(self, rounds: int, **kw) -> float:
         from crawler_spark.frontier.store import run_crawl_checkpointed
@@ -130,7 +137,7 @@ class Crawl:
             self.failed = True
 
     def measured_s(self) -> list[float]:
-        return self.round_s[self.wl.warmup:]
+        return self.round_s[WARMUP_ROUNDS:]
 
     # -- read back from committed state (after timing) -------------------
 
@@ -143,7 +150,7 @@ class Crawl:
                    .select("round", "priority", "host_id", "url", "seq")
                    .toPandas().itertuples(index=False, name=None))
         self.measured_fetches = sum(1 for row in log
-                                    if row[0] > self.wl.warmup)
+                                    if row[0] > WARMUP_ROUNDS)
         seen = (self.store.read("seen", self.wl.total_rounds)
                 .toPandas()["url"])
         return golden.check(log, seen, want)
@@ -242,25 +249,13 @@ def layer_metrics(tracer, crawl: Crawl, untraced_p50: float) -> dict:
     return out
 
 
-def layer_unit(name: str) -> str:
-    last = name.rsplit(".", 1)[-1]
-    if last == "s" or last.endswith("_s"):
-        return "s"
-    if name.startswith("store.commit.mb") or last.endswith("_mb"):
-        return "MB"
-    if last.endswith("_rows"):
-        return "rows"
-    if name in ("trace.coverage", "trace.overhead"):
-        return "ratio"
-    return "count"
-
-
 def bench(args) -> dict:
     """One run of one workload; returns the result record."""
     from perfbench import golden, stop_spark
     from perfbench.workloads import N_HOSTS, WORKLOADS, input_dir
 
     wl = WORKLOADS[args.workload]
+    units = metric_units()
     run_dir = os.path.join(ROOT, ".perfbench_run", str(os.getpid()))
     shutil.rmtree(run_dir, ignore_errors=True)  # left by a killed run
     os.makedirs(run_dir)
@@ -276,7 +271,7 @@ def bench(args) -> dict:
     if args.trace:
         from perfbench.trace import Tracer
 
-        tracer = Tracer(measured_from=wl.warmup + 1)
+        tracer = Tracer()
     spark = None
     try:
         t_start = time.time()
@@ -325,13 +320,12 @@ def bench(args) -> dict:
         attempted = sum(len(c.round_s) + c.failed for c in crawls)
         failed = attempted if errors else 0
         rounds = [s for c in crawls for s in c.measured_s()]
-        metrics, units = {}, END_TO_END_UNITS
+        metrics = {}
         if errors:
             pass  # no figures from a crawl whose output is wrong
         elif tracer:
             metrics = layer_metrics(tracer, crawls[1],
                                     statistics.median(crawls[2].measured_s()))
-            units = {k: layer_unit(k) for k in metrics}
         else:
             metrics = {
                 "setup_s": session_s + crawls[0].init_s,
@@ -403,7 +397,6 @@ def main(argv=None) -> int:
         print(f"perfbench: no crawler_spark package under {ROOT}",
               file=sys.stderr)
         return 2
-    sys.path.insert(0, ROOT)
     from perfbench.workloads import WORKLOADS
 
     if args.workload == "all":

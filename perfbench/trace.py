@@ -24,6 +24,7 @@ from dataclasses import dataclass, field
 
 from crawler_spark.frontier import incremental
 from crawler_spark.frontier import store as store_mod
+from perfbench.workloads import WARMUP_ROUNDS
 
 
 @dataclass
@@ -54,7 +55,6 @@ class Tracer:
     # incremental fallback-host frames of the measured rounds: tiny and
     # checkpointed by the program, kept to be counted after the crawl
     kept: list = field(default_factory=list)
-    measured_from: int = 1
     _depth: int = 0
     _undo: list = field(default_factory=list)
 
@@ -66,7 +66,7 @@ class Tracer:
             try:
                 result = fn(*args, **kwargs)
                 if name == "incremental.schedule_incremental" \
-                        and self.round >= self.measured_from:
+                        and self.round > WARMUP_ROUNDS:
                     self.kept.append(result[1])
                 return result
             finally:

@@ -12,7 +12,6 @@ expected output.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 import subprocess
@@ -21,7 +20,7 @@ from dataclasses import dataclass
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_HOSTS = 1000
-WARMUP_ROUNDS = 1
+WARMUP_ROUNDS = 1  # unmeasured rounds before the measured ones
 
 
 @dataclass(frozen=True)
@@ -32,11 +31,10 @@ class Workload:
     rounds: int                   # measured rounds per crawl
     seeds: int | None = None      # None = seed every listing page
     frontier_mode: str = "full"
-    warmup: int = WARMUP_ROUNDS   # unmeasured rounds before them
 
     @property
     def total_rounds(self) -> int:
-        return self.warmup + self.rounds
+        return WARMUP_ROUNDS + self.rounds
 
     def n_pages(self, seed: int) -> int:
         # never a multiple of 31: outlinks are (31p + 17i + 1) mod n, and
@@ -68,14 +66,11 @@ def input_dir(wl: Workload, seed: int, cache_dir: str) -> str:
     same cold JVM whether or not the cache was warm. The key includes a
     hash of the generator's source: a changed ``synth.py`` or ``spec.py``
     regenerates them."""
+    from perfbench import source_hash
+
     n_pages, n_seeds = wl.n_pages(seed), wl.n_seeds(seed)
-    src = hashlib.sha256()
-    for name in ("synth.py", "spec.py"):
-        with open(os.path.join(ROOT, "crawler_spark", "frontier", name),
-                  "rb") as f:
-            src.update(f.read())
     path = os.path.join(cache_dir, f"inputs-{n_pages}-{n_seeds}-"
-                                   f"{src.hexdigest()[:12]}")
+                                   f"{source_hash('synth.py', 'spec.py')}")
     if not os.path.isdir(path):
         tmp = f"{path}.{os.getpid()}.tmp"
         subprocess.run([sys.executable, os.path.abspath(__file__), tmp,
