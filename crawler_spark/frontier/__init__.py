@@ -5,7 +5,6 @@ Modules:
 - synth      — deterministic synthetic web graph + robots dim (Spark-native)
 - engine     — the scheduling round as a pure DataFrame job
 - store      — round-snapshot warehouse with atomic commits + resume
-- bloom      — partitioned Bloom-filter URL-seen sidecars
 - simulator  — pure-Python reference-semantics golden generator
 - images     — image+caption payload table (binary column) + PSNR verify
 """

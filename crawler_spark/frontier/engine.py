@@ -2,17 +2,14 @@
 
 One round = dedupe -> robots -> politeness budget (salted per-host top-k)
 -> fetch join -> link expansion -> first-discovery-wins enqueue -> retry /
-DLQ routing -> metrics. No per-row Python anywhere: every step is native
-Catalyst expressions (whole-stage codegen) except the optional Bloom
-pre-filter sidecar (Arrow-batched, bloom.py).
+DLQ routing. No per-row Python anywhere: every step is native Catalyst
+expressions (whole-stage codegen).
 
 Scale design (100 TB / 10^10-URL frontier):
 - The only shuffles per round are (a) the per-host top-k window (two-phase,
   salted — hot hosts can't pin a partition), (b) the fetch join on url,
-  and (c) the anti-join against `seen`. (b)+(c) are equi-joins AQE can
-  re-plan; the `seen` anti-join is additionally cut by a runtime bloom
-  filter (session.py enables spark.sql.optimizer.runtime.bloomFilter) and
-  by the explicit partitioned bloom sidecar (bloom.py).
+  and (c) the exact anti-join against `seen` (the URL-seen set). (b)+(c)
+  are equi-joins AQE can re-plan.
 - Dedupe identity is the exact URL string — hashes are only order keys —
   so collisions can never corrupt the seen-set.
 - State tables are re-derived per round and checkpointed (store.py round
@@ -46,10 +43,9 @@ class CrawlState:
     fetch_log: list[DataFrame] = field(default_factory=list)
     pages: list[DataFrame] = field(default_factory=list)
     dlq: list[DataFrame] = field(default_factory=list)
-    metrics: list[dict] = field(default_factory=list)
     # URLs first enqueued THIS round (seen' = seen ∪ seen_delta) — the
-    # store persists it so bloom sidecars update incrementally instead of
-    # rebuilding from the full seen set every round.
+    # store persists it so a reader gets the round's discoveries (and a
+    # base+delta seen set can be built) without diffing full snapshots.
     seen_delta: DataFrame | None = None
     # rows ADDED to the frontier this round (new links ∪ requeues) — the
     # incremental scheduler (incremental.py) merges exactly these into
@@ -78,7 +74,6 @@ def enqueue(
     seen: DataFrame,
     robots: DataFrame,
     disc_round: int,
-    seen_bloom=None,
 ) -> DataFrame:
     """Shared enqueue path (spec step 5) for seeds and discovered links.
 
@@ -106,11 +101,6 @@ def enqueue(
         .where(F.col("disallow").isNull() | ~url.contains(F.col("disallow")))
         .drop("disallow")
     )
-    if seen_bloom is not None:
-        # D1 two-tier dedupe: bloom-miss rows bypass the anti-join shuffle
-        # entirely; bloom-hit rows get the exact check. Bit-identical to
-        # the plain anti-join (bloom.py guarantees no false negatives).
-        return seen_bloom.filter_new(gated, seen.select("url"), "url")
     # first-discovery-wins: exact anti-join against every URL ever enqueued
     return gated.join(seen.select("url"), "url", "left_anti")
 
@@ -172,14 +162,13 @@ def run_round(
     round_no: int,
     k_per_host: int,
     max_retries: int = spec.MAX_RETRIES,
-    seen_bloom=None,
-    collect_metrics: bool = True,
     cooldown_rounds: int = 1,
     fetch_plan: str = "broadcast",
     checkpoint_fetched: bool = True,
     precomputed_batch: DataFrame | None = None,
 ) -> tuple[CrawlState, DataFrame]:
-    """Execute one scheduling round (spec steps 1-8). Returns (state', batch).
+    """Execute one scheduling round (spec steps 1-7; the checkpointed store
+    writes step 8's metrics row). Returns (state', batch).
 
     ``precomputed_batch``: a batch already scheduled by a caller-side
     scheduler (incremental.py's head index) — must be value-identical to
@@ -229,8 +218,6 @@ def run_round(
     #    (frontier/bucketed.py); the equi-join then exchanges ONLY the
     #    batch side, the web table never moves again (plan-asserted in
     #    tests/test_bucketed_join.py; measured in BENCH.md).
-    #  * "shuffle": AQE's plain shuffled join (baseline; web re-shuffles
-    #    per round).
     web_cols = web.select(
         "url", "page_id", "kind", "status", "outlinks", "image_id",
         # headers metadata (JSONB/Mongo-doc analogue, SURVEY §1.2): a web
@@ -240,7 +227,7 @@ def run_round(
     )
     if fetch_plan == "broadcast":
         fetched = web_cols.join(F.broadcast(batch), "url", "inner")
-    elif fetch_plan in ("shuffle", "bucketed"):
+    elif fetch_plan == "bucketed":
         fetched = batch.join(web_cols, "url", "inner")
     else:
         raise ValueError(f"unknown fetch_plan {fetch_plan!r}")
@@ -268,7 +255,7 @@ def run_round(
 
     # 5. link expansion -> enqueue
     links = ok.select(F.explode("outlinks").alias("url")).dropDuplicates(["url"])
-    new_rows = enqueue(links, state.seen, robots, round_no, seen_bloom=seen_bloom)
+    new_rows = enqueue(links, state.seen, robots, round_no)
     if checkpoint_fetched:
         # bounded (≤ batch * outdegree rows) and consumed by THREE state
         # sinks (frontier', seen', seen_delta): materialize once so the
@@ -312,26 +299,8 @@ def run_round(
     state.pages.append(pages_delta)
     state.dlq.append(dlq_delta)
 
-    if collect_metrics:
-        # 8. per-round metrics + per-partition lineage (F1/F5). One extra
-        # pass over the (small) batch; counts of big tables reuse cached
-        # state from the caller's checkpoint.
-        m = batch.agg(
-            F.count("*").alias("n_batch"),
-            F.countDistinct("host_id").alias("n_hosts"),
-            F.sum((F.col("retry_count") > 0).cast("int")).alias("n_retried"),
-        ).collect()[0]
-        state.metrics.append(
-            {
-                "round": round_no,
-                "n_batch": m["n_batch"],
-                "n_hosts": int(m["n_hosts"]),
-                "n_retried": int(m["n_retried"] or 0),
-            }
-        )
-
     return CrawlState(frontier_next, seen_next, hosts_next, state.fetch_log,
-                      state.pages, state.dlq, state.metrics,
+                      state.pages, state.dlq,
                       seen_delta=new_rows.select("url"),
                       frontier_delta=new_rows.select(*FRONTIER_COLS)
                       .unionByName(requeue.select(*FRONTIER_COLS))), batch
@@ -344,7 +313,6 @@ def run_crawl(
     robots: DataFrame,
     rounds: int,
     k_per_host: int,
-    collect_metrics: bool = False,
     cooldown_rounds: int = 1,
 ) -> CrawlState:
     """In-memory multi-round crawl (store.py has the checkpointed variant).
@@ -363,7 +331,6 @@ def run_crawl(
     )
     for r in range(1, rounds + 1):
         state, _ = run_round(spark, state, web, robots, r, k_per_host,
-                             collect_metrics=collect_metrics,
                              cooldown_rounds=cooldown_rounds)
         state.frontier = state.frontier.localCheckpoint(eager=True)
         state.seen = state.seen.localCheckpoint(eager=True)

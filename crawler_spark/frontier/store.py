@@ -121,14 +121,18 @@ class RoundStore:
         rs = self.committed_rounds()
         return rs[-1] if rs else None
 
+    def _listed(self, round_no: int) -> dict:
+        """Tables named by round ``round_no``'s manifest ({} if none)."""
+        if not os.path.exists(self._manifest(round_no)):
+            return {}
+        with open(self._manifest(round_no)) as f:
+            return json.load(f).get("tables", {})
+
     def has_table(self, table: str, round_no: int) -> bool:
         """Manifest membership — the ONLY visibility authority. A bare
         directory can be an orphaned partial write from a crashed
         commit; trusting os.path.isdir would read truncated state."""
-        if not os.path.exists(self._manifest(round_no)):
-            return False
-        with open(self._manifest(round_no)) as f:
-            return table in json.load(f).get("tables", {})
+        return table in self._listed(round_no)
 
     def read(self, table: str, round_no: int) -> DataFrame:
         return self.spark.read.parquet(self._dir(table, round_no))
@@ -137,8 +141,9 @@ class RoundStore:
         """Union of a delta table across all committed rounds (time travel:
         pass ``upto`` for the view as of that round)."""
         rounds = [r for r in self.committed_rounds() if upto is None or r <= upto]
+        # manifest membership, as in has_table: never a bare directory
         paths = [self._dir(table, r) for r in rounds
-                 if os.path.isdir(self._dir(table, r))]
+                 if table in self._listed(r)]
         # mergeSchema: later rounds may widen a delta table (e.g. pages
         # gaining payload columns) — schema evolution like Iceberg's.
         return self.spark.read.option("mergeSchema", "true").parquet(*paths)
@@ -178,6 +183,35 @@ def init_crawl(store: RoundStore, seeds: DataFrame, robots: DataFrame) -> None:
     })
 
 
+def merge_seeds(store: RoundStore, urls: DataFrame, robots: DataFrame,
+                extra: dict) -> None:
+    """Out-of-band seed merge (the streaming inbox and the Kafka source):
+    route ``urls`` through the standard enqueue path and re-commit the
+    latest round with the new rows merged into frontier, seen and
+    seen_delta. seen_delta is the record of what round r added to seen
+    (seen(r) = seen(r-1) ∪ seen_delta(r)): readers count a round's
+    discoveries from it and a base+delta seen set is built on it, so an
+    arrival merged into seen alone would be missing there. Idempotent per
+    micro-batch: a replay re-commits the same merged state."""
+    last = store.latest_round()
+    if last is None:
+        raise RuntimeError("init_crawl the store before streaming seeds")
+    frontier = store.read("frontier", last)
+    seen = store.read("seen", last)
+    new_rows = enqueue(urls.dropDuplicates(["url"]), seen, robots,
+                       disc_round=last).localCheckpoint(eager=True)
+    # materialize BEFORE committing: the commit overwrites the very files
+    # the lazy frontier/seen/seen_delta reads would scan
+    merged = {
+        "frontier": frontier.unionByName(new_rows.select(*FRONTIER_COLS)),
+        "seen": seen.unionByName(new_rows.select("url")),
+        "seen_delta": store.read("seen_delta", last)
+        .unionByName(new_rows.select("url")),
+    }
+    store.commit(last, {name: df.localCheckpoint(eager=True)
+                        for name, df in merged.items()}, extra=extra)
+
+
 def run_crawl_checkpointed(
     store: RoundStore,
     web: DataFrame,
@@ -185,9 +219,6 @@ def run_crawl_checkpointed(
     rounds: int,
     k_per_host: int,
     seeds: DataFrame | None = None,
-    use_bloom: bool = False,
-    bloom_buckets: int = 16,
-    bloom_capacity: int = 100_000,
     cooldown_rounds: int = 1,
     images: DataFrame | None = None,
     fetch_plan: str = "broadcast",
@@ -227,10 +258,6 @@ def run_crawl_checkpointed(
             seen=store.read("seen", r - 1),
             hosts=store.read("hosts", r - 1),
         )
-        seen_bloom = None
-        if use_bloom:
-            seen_bloom = _bloom_for_round(
-                store, state, r, bloom_capacity, bloom_buckets)
         batch_pre, head, fb_hosts = None, None, None
         if frontier_mode == "incremental":
             from .incremental import build_head, schedule_incremental
@@ -252,7 +279,6 @@ def run_crawl_checkpointed(
         elif frontier_mode != "full":
             raise ValueError(f"unknown frontier_mode {frontier_mode!r}")
         state, batch = run_round(spark, state, web, robots, r, k_per_host,
-                                 collect_metrics=False, seen_bloom=seen_bloom,
                                  cooldown_rounds=cooldown_rounds,
                                  fetch_plan=fetch_plan,
                                  precomputed_batch=batch_pre)
@@ -318,55 +344,6 @@ def run_crawl_checkpointed(
                 fb_hosts, k_per_host)
         store.commit(r, tables, extra={"k_per_host": k_per_host})
     return rounds
-
-
-def _bloom_for_round(store: RoundStore, state: CrawlState, r: int,
-                     capacity: int, n_buckets: int):
-    """Sidecar covering seen(r-1), maintained INCREMENTALLY: copy the
-    previous round's bucket files forward and OR in only round r-1's
-    seen_delta — at 10^10 seen URLs a round's discoveries touch a handful
-    of buckets, so the full-hash build cost is paid once, not per round.
-    Falls back to a full build from the seen snapshot when there is no
-    complete predecessor (round 1, resume into an old store, crash mid-
-    copy). Completeness is marked by a `_complete` file written last."""
-    import shutil
-
-    from .bloom import BloomSeen
-
-    bdir = os.path.join(store.root, "bloom", f"r{r-1:05d}")
-    prev = os.path.join(store.root, "bloom", f"r{r-2:05d}")
-    done = os.path.join(bdir, "_complete")
-    if os.path.exists(done):
-        return BloomSeen.open(bdir, capacity, n_buckets)  # resume: reuse
-    delta_dir = store._dir("seen_delta", r - 1)
-    if (r >= 2 and os.path.exists(os.path.join(prev, "_complete"))
-            and os.path.isdir(delta_dir)):
-        # Copy-forward + OR-in happens entirely in a tmp dir, with the
-        # marker written there LAST, then one atomic rename.  copytree
-        # copies files in arbitrary order, so copying prev's `_complete`
-        # straight into bdir would open a crash window where a partial /
-        # not-yet-updated bucket set carries a valid marker and the
-        # resume early-return above reuses it — bloom false negatives
-        # let seen URLs bypass the anti-join and be re-enqueued.
-        tmp = bdir + ".tmp"
-        shutil.rmtree(bdir, ignore_errors=True)  # partial attempt
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.copytree(prev, tmp,
-                        ignore=shutil.ignore_patterns("_complete"))
-        bloom = BloomSeen.open(tmp, capacity, n_buckets)
-        bloom.update(store.read("seen_delta", r - 1))
-        with open(os.path.join(tmp, "_complete"), "w") as f:
-            f.write("ok")
-        os.rename(tmp, bdir)  # bdir exists only fully updated + marked
-        return BloomSeen.open(bdir, capacity, n_buckets)
-    shutil.rmtree(bdir, ignore_errors=True)
-    bloom = BloomSeen.build(
-        state.seen, bdir,
-        capacity_per_bucket=capacity, n_buckets=n_buckets,
-    )
-    with open(done, "w") as f:
-        f.write("ok")
-    return bloom
 
 
 def pages_current(store: RoundStore, upto: int | None = None) -> DataFrame:

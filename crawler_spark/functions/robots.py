@@ -376,7 +376,7 @@ def extract_sitemaps(
     """
     lines = df.select(
         F.col(host_col),
-        F.explode(F.split(F.col(txt_col), "\n")).alias("_ln"),
+        F.explode(F.split(F.col(txt_col), r"\r?\n")).alias("_ln"),
     )
     stripped = F.split(F.col("_ln"), "#").getItem(0)
     url = F.regexp_extract(

@@ -223,12 +223,10 @@ def crawl_pages_with_captions(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_oracle_sql(rounds=5, cooldown=2),
 )
 def crawl_5round_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """5 rounds, cross-round host cooldown (cooldown_rounds=2) AND the
-    partitioned bloom sidecar enabled, through the CHECKPOINTED store path
-    — retry backoff (eligible = r + 2^c, reaching 2^2=4) and the host
-    politeness gate both cross round boundaries under the unrolled SQL
-    oracle; bloom pre-filtering must leave values bit-identical (no false
-    negatives by construction)."""
+    """5 rounds with cross-round host cooldown (cooldown_rounds=2),
+    through the CHECKPOINTED store path — retry backoff (eligible = r +
+    2^c, reaching 2^2=4) and the host politeness gate both cross round
+    boundaries under the unrolled SQL oracle."""
     import shutil
     import tempfile
 
@@ -243,7 +241,7 @@ def crawl_5round_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
         store = RoundStore(spark, root)
         run_crawl_checkpointed(store, web, robots, rounds=5,
                                k_per_host=K_PER_HOST, seeds=seeds,
-                               use_bloom=True, cooldown_rounds=2)
+                               cooldown_rounds=2)
         log = store.read_deltas("fetch_log").select(
             "round", "priority", "host_id", "url", "seq"
         ).where(F.col("round") > 0)

@@ -105,7 +105,9 @@ def tune_session(spark: SparkSession) -> SparkSession:
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        # Runtime bloom-filter join: accelerates the seen-set anti-join.
+        # Runtime bloom filter: may prune one side of a selective
+        # inner/semi equi-join. It does not fire on the seen-set left-anti
+        # join of enqueue (no might_contain in that plan).
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         # ANSI off: null-on-overflow/cast semantics match the reference's
         # try/except parsing (SURVEY.md C15) and DuckDB's TRY_CAST usage.

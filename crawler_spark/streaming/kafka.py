@@ -151,8 +151,8 @@ def kafka_seed_ingest(store, robots: DataFrame, cfg: KafkaConfig):
     """The foreachBatch half of a Kafka-fed frontier: decode the raw
     records, route URLs through the standard enqueue path (validity +
     relevance + robots + exact dedupe + priority), and merge-commit into
-    the store — the exact protocol of rounds.stream_seed_inbox with Kafka
-    as the source instead of files. Exactly-once: a replayed micro-batch
+    the store through ``store.merge_seeds``, as rounds.stream_seed_inbox
+    does with files as the source. Exactly-once: a replayed micro-batch
     re-commits the same (idempotent) merged state.
 
     Returns the ``(batch_df, batch_id) -> None`` callable to pass to
@@ -160,32 +160,12 @@ def kafka_seed_ingest(store, robots: DataFrame, cfg: KafkaConfig):
     because foreachBatch hands over a plain batch DataFrame, tests drive
     it broker-free with a static Kafka-shaped frame.
     """
-    from ..frontier.engine import FRONTIER_COLS, enqueue
+    from ..frontier.store import merge_seeds
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        last = store.latest_round()
-        if last is None:
-            raise RuntimeError("init_crawl the store before streaming seeds")
         urls = decode_frontier(batch_df, cfg).select("url") \
             .where(F.col("url").isNotNull())
-        frontier = store.read("frontier", last)
-        seen = store.read("seen", last)
-        new_rows = enqueue(
-            urls.dropDuplicates(["url"]), seen, robots, disc_round=last
-        )
-        merged_frontier = frontier.unionByName(
-            new_rows.select(*FRONTIER_COLS)).localCheckpoint(eager=True)
-        merged_seen = seen.unionByName(
-            new_rows.select("url")).localCheckpoint(eager=True)
-        # keep the incremental-bloom invariant seen(r) = seen(r-1) ∪
-        # seen_delta(r) true for out-of-band arrivals (see rounds.py)
-        merged_delta = store.read("seen_delta", last).unionByName(
-            new_rows.select("url")).localCheckpoint(eager=True)
-        store.commit(last, {
-            "frontier": merged_frontier,
-            "seen": merged_seen,
-            "seen_delta": merged_delta,
-        }, extra={"kafka_batch": batch_id})
+        merge_seeds(store, urls, robots, {"kafka_batch": batch_id})
 
     return ingest
 

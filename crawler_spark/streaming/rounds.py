@@ -27,8 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..frontier.engine import FRONTIER_COLS, enqueue
-from ..frontier.store import RoundStore
+from ..frontier.store import RoundStore, merge_seeds
 
 
 def stream_seed_inbox(
@@ -45,32 +44,7 @@ def stream_seed_inbox(
     seeds_stream = spark.readStream.schema("url string").parquet(inbox_dir)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        last = store.latest_round()
-        if last is None:
-            raise RuntimeError("init_crawl the store before streaming seeds")
-        frontier = store.read("frontier", last)
-        seen = store.read("seen", last)
-        new_rows = enqueue(
-            batch_df.dropDuplicates(["url"]), seen, robots, disc_round=last
-        )
-        # materialize BEFORE committing: the commit overwrites the very
-        # files the lazy frontier/seen reads would scan (read-modify-write)
-        merged_frontier = frontier.unionByName(
-            new_rows.select(*FRONTIER_COLS)).localCheckpoint(eager=True)
-        merged_seen = seen.unionByName(
-            new_rows.select("url")).localCheckpoint(eager=True)
-        # seen_delta must absorb out-of-band arrivals too — the
-        # incremental bloom sidecar (store._bloom_for_round) reconstructs
-        # seen(r) as seen(r-1) ∪ seen_delta(r); a merge that touched only
-        # `seen` would leave the ingested URLs out of the sidecar
-        # (bloom false negatives => duplicate enqueues)
-        merged_delta = store.read("seen_delta", last).unionByName(
-            new_rows.select("url")).localCheckpoint(eager=True)
-        store.commit(last, {
-            "frontier": merged_frontier,
-            "seen": merged_seen,
-            "seen_delta": merged_delta,
-        }, extra={"stream_batch": batch_id})
+        merge_seeds(store, batch_df, robots, {"stream_batch": batch_id})
 
     return (
         seeds_stream.writeStream.foreachBatch(ingest)

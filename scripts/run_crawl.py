@@ -4,7 +4,7 @@ Cluster:
   zip -r crawler_spark.zip crawler_spark
   spark-submit --py-files crawler_spark.zip scripts/run_crawl.py \
       --warehouse hdfs:///wh --n-pages 10000000000 --rounds 20 \
-      --k-per-host 64 --n-hosts 1000000 --use-bloom
+      --k-per-host 64 --n-hosts 1000000
 
 Sandbox (local mode is chosen automatically when no master is set):
   python scripts/run_crawl.py --warehouse /tmp/wh --n-pages 100000 --rounds 5
@@ -32,12 +32,11 @@ def main() -> None:
     ap.add_argument("--n-seeds", type=int, default=8)
     ap.add_argument("--rounds", type=int, default=5)
     ap.add_argument("--k-per-host", type=int, default=3)
-    ap.add_argument("--use-bloom", action="store_true")
     ap.add_argument("--with-payload", action="store_true",
                     help="carry image+caption binary payload into pages")
     ap.add_argument("--cooldown-rounds", type=int, default=1)
     ap.add_argument("--fetch-plan", default="broadcast",
-                    choices=["broadcast", "shuffle", "bucketed"],
+                    choices=["broadcast", "bucketed"],
                     help="fetch-join strategy; 'bucketed' lays the web "
                          "table out bucketed by url ONCE (timed "
                          "separately) so every round's join exchanges "
@@ -100,7 +99,6 @@ def main() -> None:
     run_crawl_checkpointed(
         store, web, robots, args.rounds, args.k_per_host,
         seeds=None if resumed_from is not None else seeds,
-        use_bloom=args.use_bloom,
         cooldown_rounds=args.cooldown_rounds,
         images=images,
         fetch_plan=args.fetch_plan,

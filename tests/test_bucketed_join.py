@@ -97,7 +97,7 @@ def test_run_round_bucketed_plan_equals_broadcast(spark, tables):
     def one_round(web, plan, lazy=False):
         state = CrawlState(frontier=first, seen=first.select("url"))
         st, batch = run_round(spark, state, web, robots, 1, 2,
-                              collect_metrics=False, fetch_plan=plan,
+                              fetch_plan=plan,
                               checkpoint_fetched=lazy is False)
         return st, batch
 

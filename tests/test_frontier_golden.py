@@ -80,7 +80,7 @@ def test_retry_and_dlq_golden(spark):
                        first.select("url").localCheckpoint())
     for r in range(1, rounds + 1):
         state, _ = run_round(spark, state, web, robots, r, k,
-                             max_retries=1, collect_metrics=False)
+                             max_retries=1)
         state.frontier = state.frontier.localCheckpoint()
         state.seen = state.seen.localCheckpoint()
 
@@ -196,8 +196,7 @@ def test_dead_link_routes_to_dlq(spark):
     first = enqueue(seeds, seeds.limit(0), robots, 0)
     state = CrawlState(first.select(*FRONTIER_COLS).localCheckpoint(),
                        first.select("url").localCheckpoint())
-    state, batch = run_round(spark, state, web, robots, 1, 2,
-                             collect_metrics=False)
+    state, batch = run_round(spark, state, web, robots, 1, 2)
     assert batch.count() == 1                      # it was scheduled
     dlq = [r["url"] for r in state.dlq[0].collect()]
     assert dlq == [dead_url]                       # ...and DLQ'd

@@ -34,7 +34,7 @@ _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # plus the r05 first-ever promotions.
 WINDOW_CRITICAL = [
     "crawl_delay_budget_golden",  # G1 heterogeneous crawl_delay budgets
-    "crawl_5round_golden",        # D1 bloom + G1 cooldown deep oracle
+    "crawl_5round_golden",        # G1 cooldown deep oracle
     "crawl_pages_headers",        # A6/A12 headers map
     "image_payload_verify",       # A8/A9 binary cols + codec
     "image_phash_near_dup",       # image near-dup (phash bands)

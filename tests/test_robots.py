@@ -381,6 +381,9 @@ def test_extract_sitemaps_edges(spark):
                 "Sitemap:\n"),
             # no sitemap at all
             (3, "User-agent: *\nDisallow: /\n"),
+            # CRLF line endings: no trailing \r on the URL
+            (4, "User-agent: *\r\nSitemap: https://d/s.xml\r\n"
+                "Disallow: /x\r\n"),
         ],
         "host_id int, robots_txt string",
     )
@@ -392,4 +395,5 @@ def test_extract_sitemaps_edges(spark):
         (1, "https://a/n.xml"),
         (1, "https://a/s.xml"),
         (1, "https://a/t.xml"),
+        (4, "https://d/s.xml"),
     ]

@@ -61,24 +61,6 @@ def test_time_travel_view(spark, tmp_path):
     assert {r["round"] for r in upto2} == {1, 2}
 
 
-def test_bloom_accelerated_crawl_identical(spark, tmp_path):
-    """The bloom-sidecar path must be bit-identical to the exact path."""
-    web = synth.web_graph(spark, N_PAGES, N_HOSTS)
-    robots = synth.robots_dim(spark, N_HOSTS)
-    seeds = synth.seed_urls(spark, N_PAGES, N_SEEDS, N_HOSTS)
-
-    plain = RoundStore(spark, str(tmp_path / "plain"))
-    run_crawl_checkpointed(plain, web, robots, 3, K, seeds=seeds)
-    bloomy = RoundStore(spark, str(tmp_path / "bloomy"))
-    run_crawl_checkpointed(bloomy, web, robots, 3, K, seeds=seeds,
-                           use_bloom=True, bloom_buckets=8)
-
-    assert _log_rows(plain) == _log_rows(bloomy)
-    a = {r["url"] for r in plain.read("seen", 3).collect()}
-    b = {r["url"] for r in bloomy.read("seen", 3).collect()}
-    assert a == b
-
-
 def test_checkpointed_cooldown_matches_simulator(spark, tmp_path):
     from crawler_spark.frontier import simulator
     st = RoundStore(spark, str(tmp_path / "cool"))
@@ -158,12 +140,10 @@ def test_crawl_with_binary_payload(spark, tmp_path):
 
 
 def test_ingest_then_bloom_rounds_identical_to_no_bloom(spark, tmp_path):
-    """Round-2 review finding: out-of-band seed ingest must keep the
-    incremental bloom sidecar's invariant seen(r) = seen(r-1) ∪
-    seen_delta(r). Sequence: 2 bloom rounds -> Kafka seed ingest (mix of
-    already-seen and brand-new URLs) -> 2 more bloom rounds; the fetch
-    log and seen set must equal the identical sequence run WITHOUT bloom
-    (bloom is a pure pre-filter), and nothing is enqueued twice."""
+    """Out-of-band seed ingest between rounds: 2 rounds -> Kafka seed
+    ingest (mix of already-seen and brand-new URLs) -> 2 more rounds.
+    The merge must land in seen_delta as well as seen (seen(2) =
+    seen(1) ∪ seen_delta(2)), and nothing is enqueued twice."""
     from pyspark.sql import functions as F
 
     from crawler_spark.streaming.kafka import (
@@ -185,80 +165,20 @@ def test_ingest_then_bloom_rounds_identical_to_no_bloom(spark, tmp_path):
     raw = encode_frontier(msgs, cfg).select(
         F.col("key").cast("binary"), F.col("value").cast("binary"), "topic")
 
-    logs = {}
-    for name, bloom in (("bloomed", True), ("plain", False)):
-        st = RoundStore(spark, str(tmp_path / name))
-        run_crawl_checkpointed(st, web, robots, 2, K, seeds=seeds,
-                               use_bloom=bloom)
-        kafka_seed_ingest(st, robots, cfg)(raw, batch_id=0)
-        run_crawl_checkpointed(st, web, robots, 4, K, use_bloom=bloom)
-        seen = st.read("seen", 4)
-        assert seen.count() == seen.select("url").distinct().count(), name
-        fr = st.read("frontier", 4)
-        assert fr.count() == fr.select("url").distinct().count(), name
-        logs[name] = sorted(
-            (r["round"], r["priority"], r["host_id"], r["url"], r["seq"])
-            for r in st.read_deltas("fetch_log").collect())
-    assert logs["bloomed"] == logs["plain"]
+    st = RoundStore(spark, str(tmp_path / "plain"))
+    run_crawl_checkpointed(st, web, robots, 2, K, seeds=seeds)
+    kafka_seed_ingest(st, robots, cfg)(raw, batch_id=0)
 
+    def urls(table, r):
+        return {row["url"] for row in st.read(table, r).collect()}
 
-def test_bloom_sidecar_params_persisted(spark, tmp_path):
-    """Round-2 review finding: reopening a sidecar with different
-    capacity args must use the PERSISTED geometry, not re-derive it —
-    otherwise probes hit wrong bit positions (silent false negatives)."""
-    from crawler_spark.frontier.bloom import BloomSeen
-    from pyspark.sql import functions as F
-
-    seen = spark.range(0, 5000).select(
-        F.concat(F.lit("https://x/"), F.col("id").cast("string")).alias("url"))
-    p = str(tmp_path / "bp")
-    built = BloomSeen.build(seen, p, capacity_per_bucket=1000, n_buckets=8)
-    reopened = BloomSeen.open(p, capacity_per_bucket=999_999, n_buckets=64)
-    assert (reopened.m_bits, reopened.k, reopened.n_buckets) == (
-        built.m_bits, built.k, built.n_buckets)
-    # and the reopened handle still has zero false negatives
-    assert reopened.with_flag(seen).where(~F.col("bloom_maybe")).count() == 0
-
-
-def test_bloom_copy_forward_crash_window(spark, tmp_path, monkeypatch):
-    """A crash during the incremental copy-forward (after the bucket copy,
-    before/inside the delta OR-in) must leave NO `_complete` marker at the
-    final sidecar path, so resume falls back to a rebuild instead of
-    reusing a stale bucket set — a stale-but-marked sidecar would give
-    bloom false negatives and re-enqueue already-seen URLs."""
-    import pytest
-
-    from crawler_spark.frontier.bloom import BloomSeen
-    from crawler_spark.frontier.engine import CrawlState
-    from crawler_spark.frontier.store import _bloom_for_round
-
-    st = RoundStore(spark, str(tmp_path / "cw"))
-    web = synth.web_graph(spark, N_PAGES, N_HOSTS)
-    robots = synth.robots_dim(spark, N_HOSTS)
-    seeds = synth.seed_urls(spark, N_PAGES, N_SEEDS, N_HOSTS)
-    run_crawl_checkpointed(st, web, robots, 2, K, seeds=seeds,
-                           use_bloom=True, bloom_buckets=8)
-    state = CrawlState(frontier=st.read("frontier", 2),
-                       seen=st.read("seen", 2),
-                       hosts=st.read("hosts", 2))
-    bdir = os.path.join(st.root, "bloom", "r00002")
-
-    def boom(self, df, url_col="url"):
-        raise RuntimeError("crash mid OR-in")
-
-    monkeypatch.setattr(BloomSeen, "update", boom)
-    with pytest.raises(RuntimeError):
-        _bloom_for_round(st, state, 3, 100_000, 8)
-    assert not os.path.exists(os.path.join(bdir, "_complete"))
-    monkeypatch.undo()
-
-    bloom = _bloom_for_round(st, state, 3, 100_000, 8)
-    assert os.path.exists(os.path.join(bdir, "_complete"))
-    # recovered sidecar covers seen(2) with zero false negatives
-    from pyspark.sql import functions as F
-    misses = (bloom.with_flag(state.seen)
-              .where(~F.col("bloom_maybe")).count())
-    assert misses == 0
+    assert urls("seen", 2) == urls("seen", 1) | urls("seen_delta", 2)
+    assert urls("seen", 2) > urls("seen", 1)  # the ingest added URLs
+    run_crawl_checkpointed(st, web, robots, 4, K)
+    seen = st.read("seen", 4)
+    assert seen.count() == seen.select("url").distinct().count()
+    fr = st.read("frontier", 4)
+    assert fr.count() == fr.select("url").distinct().count()
 
 
 def test_pages_current_upsert_view(spark, tmp_path):
@@ -288,3 +208,19 @@ def test_pages_current_upsert_view(spark, tmp_path):
     asof1 = {r["url"]: r["page_id"]
              for r in pages_current(st, upto=1).collect()}
     assert asof1 == {"http://h/a": 1, "http://h/b": 2}
+
+
+def test_read_deltas_lists_only_manifest_tables(spark, tmp_path):
+    """A delta directory that no manifest names (an orphaned write from a
+    crashed commit) stays invisible to read_deltas, as to has_table."""
+    st = RoundStore(spark, str(tmp_path / "orphan"))
+    pages = spark.createDataFrame([(1, "http://h/a")], "round int, url string")
+    st.commit(1, {"pages": pages})
+    st.commit(2, {"fetch_log": spark.createDataFrame(
+        [(2, "http://h/b")], "round int, url string")})
+    orphan = spark.createDataFrame([(2, "http://h/x")], "round int, url string")
+    orphan.write.parquet(st._dir("pages", 2))
+
+    assert not st.has_table("pages", 2)
+    got = sorted(map(tuple, st.read_deltas("pages").collect()))
+    assert got == [(1, "http://h/a")]
